@@ -47,6 +47,10 @@ object ChatModel {
     * instance per partition, completions in `batchSize` groups — the
     * batched analog of the reference's per-record loop
     * (`run_llm_ours.py:227`), with connection reuse the reference lacks.
+    * A model may run a batch's conversations concurrently
+    * ([[HttpChatModel]] does), so `batchSize` is also the per-task
+    * in-flight bound; across the cluster at most `batchSize` × running
+    * tasks requests are in flight.
     */
   def transform(df: DataFrame, model: Model, messagesCol: String, outCol: String,
                 batchSize: Int = 32): DataFrame = {

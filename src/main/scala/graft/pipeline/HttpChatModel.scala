@@ -1,8 +1,11 @@
 package graft.pipeline
 
+import java.io.IOException
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import java.util.concurrent.{CompletableFuture, CompletionException, ExecutionException, TimeUnit}
+import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** A8's network path as a real implementation: OpenAI-compatible
@@ -17,8 +20,16 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * (`utils.py:205`). Unknown errors return `None` immediately, exactly
   * like the reference's generic `except` arm.
   *
-  * One client per model instance; [[ChatModel.transform]] instantiates per
-  * partition, so connections amortize across a partition's rows.
+  * Where the reference makes one blocking call per record
+  * (`run_llm_ours.py:227`), [[complete]] sends every conversation of a
+  * batch at once (`sendAsync`) and returns the results in batch order; the
+  * rules above apply to each conversation on its own, and a retry waits on
+  * a timer, not a thread. The batch is the in-flight bound: at most
+  * `batchSize` requests per task under [[ChatModel.transform]].
+  *
+  * One client per deserialized model instance, i.e. per task under
+  * [[ChatModel.transform]], so connections amortize across a partition's
+  * rows.
   */
 final class HttpChatModel(
     url: String,
@@ -34,6 +45,8 @@ final class HttpChatModel(
   @transient private lazy val client =
     HttpClient.newBuilder().connectTimeout(Duration.ofMillis(timeoutMs)).build()
   @transient private lazy val mapper = new ObjectMapper()
+  @transient private lazy val backoff =
+    CompletableFuture.delayedExecutor(retryBackoffMs, TimeUnit.MILLISECONDS)
 
   private def requestBody(messages: Seq[ChatModel.Message]): String = {
     val root = mapper.createObjectNode()
@@ -56,53 +69,75 @@ final class HttpChatModel(
   }
 
   /** Transient = retry (rate limit, unavailable, timeout-ish, connection);
-    * anything else = give up with None. Fatal JVM errors and interrupts
-    * propagate (a null prediction must mean a model failure, not a hidden
-    * OOM or a swallowed task cancellation). */
-  private def once(messages: Seq[ChatModel.Message]): Either[Boolean, Option[String]] = {
-    try {
-      var builder = HttpRequest.newBuilder(URI.create(url))
-        .timeout(Duration.ofMillis(timeoutMs))
-        .header("Content-Type", "application/json")
-      if (apiKey.nonEmpty) builder = builder.header("Authorization", s"Bearer $apiKey")
-      val req = builder
-        .POST(HttpRequest.BodyPublishers.ofString(requestBody(messages)))
-        .build()
-      val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-      resp.statusCode() match {
+    * anything else = give up with None. Fatal JVM errors propagate (a null
+    * prediction must mean a model failure, not a hidden OOM). Async
+    * failures arrive wrapped in `CompletionException`, so the cause is
+    * classified, not the wrapper. */
+  private def classify(resp: HttpResponse[String], err: Throwable): Either[Boolean, Option[String]] = {
+    var e = err
+    while (e.isInstanceOf[CompletionException] && e.getCause != null) e = e.getCause
+    e match {
+      case null => resp.statusCode() match {
         case 200 =>
           // a 200 with an unparseable body is a permanent give-up, not a
           // retry (the reference's generic except arm returns None
           // immediately); note JsonProcessingException IS an IOException,
           // so parse failures must not reach the transient arm below
-          Right(try parseContent(resp.body()) catch { case scala.util.control.NonFatal(_) => None })
+          Right(try parseContent(resp.body()) catch { case NonFatal(_) => None })
         case 429 | 500 | 502 | 503 | 504 => Left(true) // transient -> retry
         case _ => Left(false) // permanent -> None
       }
-    } catch {
-      case e: InterruptedException =>
-        Thread.currentThread().interrupt()
-        throw new RuntimeException("LLM call interrupted (task cancellation)", e)
-      case _: java.net.http.HttpTimeoutException => Left(true)
-      case _: java.io.IOException => Left(true)
-      case scala.util.control.NonFatal(_) => Left(false)
+      case _: IOException => Left(true) // HttpTimeoutException included
+      case NonFatal(_) => Left(false)
+      case fatal => throw fatal
     }
   }
 
-  override def complete(batch: Seq[Seq[ChatModel.Message]]): Seq[Option[String]] =
-    batch.map { messages =>
-      var attempt = 0
-      var result: Option[String] = None
-      var done = false
-      while (!done) {
-        once(messages) match {
-          case Right(r) => result = r; done = true
-          case Left(retriable) =>
-            attempt += 1
-            if (!retriable || attempt > maxRetries) { result = None; done = true }
-            else Thread.sleep(retryBackoffMs)
-        }
+  /** One conversation: send, and on a transient failure send again after
+    * `retryBackoffMs` on a timer (no thread sleeps, so a 503 never holds
+    * up the rest of its batch), up to `maxRetries` retries. Cancelling the
+    * returned future stops further attempts and aborts the exchange in
+    * flight. */
+  private def converse(messages: Seq[ChatModel.Message]): CompletableFuture[Option[String]] = {
+    val result = new CompletableFuture[Option[String]]()
+    def attempt(n: Int): Unit = if (!result.isDone) {
+      val sent =
+        try {
+          var builder = HttpRequest.newBuilder(URI.create(url))
+            .timeout(Duration.ofMillis(timeoutMs))
+            .header("Content-Type", "application/json")
+          if (apiKey.nonEmpty) builder = builder.header("Authorization", s"Bearer $apiKey")
+          val req = builder
+            .POST(HttpRequest.BodyPublishers.ofString(requestBody(messages)))
+            .build()
+          client.sendAsync(req, HttpResponse.BodyHandlers.ofString())
+        } catch { case NonFatal(e) => CompletableFuture.failedFuture[HttpResponse[String]](e) }
+      result.whenComplete((_, _) => sent.cancel(true))
+      sent.whenComplete { (resp, err) =>
+        try classify(resp, err) match {
+          case Right(r) => result.complete(r)
+          case Left(true) if n < maxRetries => backoff.execute(() => attempt(n + 1))
+          case Left(_) => result.complete(None)
+        } catch { case t: Throwable => result.completeExceptionally(t) }
       }
-      result
     }
+    attempt(0)
+    result
+  }
+
+  /** Sends every conversation of the batch at once and returns the
+    * results in batch order, so a batch costs about one round trip rather
+    * than one per row. Interrupting the calling thread (Spark task
+    * cancellation) cancels the pending calls and rethrows, interrupt flag
+    * kept. */
+  override def complete(batch: Seq[Seq[ChatModel.Message]]): Seq[Option[String]] = {
+    val pending = batch.iterator.map(converse).toVector
+    try pending.map(_.get())
+    catch {
+      case e: InterruptedException =>
+        Thread.currentThread().interrupt()
+        throw new RuntimeException("LLM call interrupted (task cancellation)", e)
+      case e: ExecutionException => throw e.getCause
+    } finally pending.foreach(_.cancel(true))
+  }
 }
