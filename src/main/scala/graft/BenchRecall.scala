@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   *     nudged query vectors (no self-exclusion — the source vector is a
   *     legitimate neighbor, per the q170/q173 contract).
   *   - q76 (IVF-PQ): recall@5 vs brute-force cosine top-5
-  *     ([[graft.ops.Similarity.cosineTopK]]), the RecallSweep oracle.
+  *     ([[graft.ops.Similarity.cosineTopK]]), the oracle of the round-8
+  *     recall sweep recorded in [[graft.ops.Similarity.ivfPqTopK]]'s doc.
   *
   * Everything here is deterministic (total-order ranking on both sides),
   * so the block is a CONSTANT for a given binary + corpus: any movement

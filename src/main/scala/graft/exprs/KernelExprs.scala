@@ -11,9 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.text.{ParseKernels, TextKernels}
 
 /** The reference's ENTIRE scoring/parsing kernel surface as native SQL
-  * functions (SURVEY §2 Part A: A9/A10/A16-A19/A26-A27), so a SQL-first
-  * user can run the full eval pipeline through `spark.sql` with no Scala
-  * (`SqlEvalPipelineSpec` pins a q40-shaped eval end-to-end).
+  * functions (SURVEY §2 Part A: A9/A10/A16-A19/A22/A26-A27), and the ONE
+  * definition of each rule: the Scala pipeline ([[graft.pipeline.Stages]],
+  * [[graft.pipeline.Inference]]) and the declared queries call them through
+  * [[GraftFunctions.call]], and a SQL-first user can run the full eval
+  * pipeline through `spark.sql` with no Scala (`SqlEvalPipelineSpec` pins
+  * a q40-shaped eval end-to-end).
   *
   * These are Catalyst `Expression`s over the pure kernels, NOT Scala
   * UDFs: eval reads `ArrayData`/`UTF8String` directly off the internal

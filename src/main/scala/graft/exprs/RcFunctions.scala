@@ -2,15 +2,14 @@ package graft.exprs
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.text.{ParseKernels, TextKernels}
 
-/** Column-level API over the RC-RAG scoring/parsing operators (SURVEY §2
-  * Part A). Everything expressible with codegen'd built-ins is built from
-  * `org.apache.spark.sql.functions`; the three per-row string kernels the
-  * reference needs (Unicode token containment, token-bag F1, stemmed
-  * ROUGE-L — `utils.py:147-199,313-339`) are Scala UDFs over the pure
-  * kernels in [[graft.text.TextKernels]] (SURVEY §7.3: the codegen loss is
-  * confined to the expression and immaterial next to the regex built-ins).
+/** Column-level helpers over the RC-RAG scoring operators (SURVEY §2
+  * Part A) that have no [[KernelExprs]] twin. The reference's per-row
+  * string kernels (EM, token F1, ROUGE-L, `has_answer` containment,
+  * `deal_prediction_with_evidence`, the fusion parsers, reference
+  * expansion) have ONE definition each: the registered Catalyst
+  * expressions in [[KernelExprs]], called from Scala through
+  * [[GraftFunctions.call]] (`graft_em`, `graft_deal_prediction`, ...).
   */
 object RcFunctions {
 
@@ -19,95 +18,45 @@ object RcFunctions {
 
   /** `_normalize_answer` (`utils.py:292-306`) as a codegen-friendly column
     * chain: lower -> translate punctuation away -> drop articles ->
-    * collapse whitespace. ASCII `\b` (matches the DuckDB/RE2 oracle); the
-    * exact-parity Unicode variant is [[normalizeAnswerUdf]].
+    * collapse whitespace. ASCII `\b`, on purpose: it matches the
+    * DuckDB/RE2 oracle of the SQL-expressible queries (q31). The
+    * reference's Unicode-aware rule is `graft_normalize`
+    * ([[NormalizeAnswerExpr]]).
     */
   def normalizeAnswer(c: Column): Column =
     trim(regexp_replace(
       regexp_replace(translate(lower(c), PunctChars, ""), "\\b(a|an|the)\\b", " "),
       "\\s+", " "))
 
-  val normalizeAnswerUdf = udf((s: String) => TextKernels.normalizeAnswer(s))
-
-  /** `EM_compute` (`utils.py:309-310`) — codegen'd variant with ASCII
-    * `\b` article boundaries, matching the DuckDB/RE2 oracle; use ONLY in
-    * oracle-checked SQL-expressible queries. Parity-scored paths use
-    * [[emParity]]. */
+  /** `EM_compute` (`utils.py:309-310`) over [[normalizeAnswer]]'s ASCII
+    * `\b` — use ONLY in oracle-checked SQL-expressible queries. Scored
+    * pipeline paths use `graft_em` ([[EmExpr]]), which shares the Unicode
+    * normalization with F1/RL. */
   def em(pred: Column, refs: Column): Column =
     when(pred.isNull, lit(0)).otherwise(
       exists(refs, r => normalizeAnswer(r) === normalizeAnswer(pred)).cast("int"))
-
-  /** EM with the reference's Unicode-aware normalization (Python `re \b`
-    * is Unicode on str): shares [[TextKernels.normalizeAnswer]] with
-    * F1/RL so all three scores tokenize identically on accented text. */
-  val emParity = udf((refs: Seq[String], pred: String) =>
-    TextKernels.emCompute(refs, pred))
 
   /** `match`'s raw-substring has_answer (`utils.py:403-407`). */
   def hasAnswerSubstr(pred: Column, refs: Column): Column =
     when(pred.isNull, lit(false)).otherwise(
       exists(refs, r => instr(pred, r) > 0))
 
-  val tokenF1Udf = udf((refs: Seq[String], pred: String) =>
-    if (pred == null) 0.0 else TextKernels.tokenF1(refs, pred))
-
-  val rougeLUdf = udf((refs: Seq[String], pred: String) =>
-    if (pred == null) 0.0 else TextKernels.rougeLRecall(refs, pred))
-
-  /** `has_answer` token-sequence containment (`utils.py:16-199`). */
-  val tokensContainUdf = udf((answers: Seq[String], text: String) =>
-    if (text == null) false else TextKernels.tokensContain(answers, text))
-
-  /** `deal_prediction_with_evidence` (`utils.py:202-219`) as a struct
-    * column `(reject, answer, evidence)`. */
-  val dealPredictionUdf = udf((pred: String) => ParseKernels.dealPrediction(pred))
-
-  /** `match` (`utils.py:399-413`) as a struct column: the three scores,
-    * the substring has_answer, and the accept verdict
+  /** `match` (`utils.py:399-413`) as a struct column: the three scores
+    * (`graft_em`, `graft_token_f1`, `graft_rougel`), the substring
+    * has_answer, and the accept verdict
     * (EM==1 ∨ has_answer ∨ F1>0.7 ∨ RL>0.7).
     */
   def matchStruct(pred: Column, refs: Column): Column = {
-    val emC = emParity(refs, pred)
-    val f1C = tokenF1Udf(refs, pred)
-    val rlC = rougeLUdf(refs, pred)
+    val emC = GraftFunctions.call("graft_em", refs, pred)
+    val f1C = GraftFunctions.call("graft_token_f1", refs, pred)
+    val rlC = GraftFunctions.call("graft_rougel", refs, pred)
     val haC = hasAnswerSubstr(pred, refs)
     struct(
       emC.as("EM"), f1C.as("F1"), rlC.as("RL"), haC.as("has_answer"),
       (emC === 1 || haC || f1C > 0.7 || rlC > 0.7).as("ok"))
   }
 
-  /** Reference expansion (`run_llm_ours.py:90-94`): split golds on
-    * `" or "`, keep the originals too (extend, not replace), dedup.
-    * The reference's set order is nondeterministic; `array_distinct`
-    * keeps first-occurrence order (deterministic superset behavior —
-    * order is semantically irrelevant, every consumer is max-over-list).
-    */
-  def expandReferences(refs: Column): Column =
-    array_distinct(concat(refs,
-      flatten(transform(filter(refs, r => instr(r, " or ") > 0), r => split(r, " or ")))))
-
   /** Python truthiness for strings (`our_method.py:15,23`): non-null and
     * non-empty (SURVEY §2.4 quirk 7). */
   def truthy(c: Column): Column = c.isNotNull && length(c) > 0
-
-  /** `deal_fusion` live semantics (`utils.py:368-378`): substring "keep". */
-  def fusionKeep(c: Column): Column =
-    when(c.isNotNull && instr(c, "keep") > 0, "keep").otherwise("discard")
-
-  /** `deal_fusion_probability` (`utils.py:381-393`). */
-  def fusionProbability(c0: Column): Column = {
-    val c = when(lower(c0).startsWith("probability: "), c0.substr(lit(14), length(c0)))
-      .otherwise(c0)
-    val full = regexp_extract(c, "\\d+\\.\\d+", 0)
-    val intDot = regexp_extract(c, "\\d+\\.", 0)
-    when(c0.isNull, 0.0)
-      .when(full =!= "", full.cast("double"))
-      .when(intDot =!= "", intDot.cast("double"))
-      .otherwise(0.0)
-  }
-
-  /** A14/A15/A13 as columns (answer/evidence extraction) live in
-    * [[dealPredictionUdf]]; the fragments are also exposed for tests. */
-  val answerFromTextUdf = udf((s: String) => if (s == null) null else ParseKernels.answerFromText(s))
-  val evidenceFromTextUdf = udf((s: String) => if (s == null) null else ParseKernels.evidenceFromText(s))
 }

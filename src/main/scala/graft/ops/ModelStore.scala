@@ -196,10 +196,14 @@ object ModelStore {
         val v = (r.getLong(0),
           if (r.isNullAt(1)) "0" else r.getDecimal(1).toBigInteger.toString)
         memoKey.foreach { k =>
-          // at cap, evict ONE arbitrary entry instead of wiping the map: a
+          // at cap, evict ONE entry instead of wiping the map: a
           // long-lived serving JVM crossing 4096 distinct plan/file-state
-          // pairs keeps its hot keys warm instead of re-paying every
-          // fingerprint scan after a wholesale clear (round-16 ADVICE)
+          // pairs keeps most of its entries instead of re-paying every
+          // fingerprint scan after a wholesale clear (round-16 ADVICE).
+          // The victim is whatever the key iterator yields first —
+          // arbitrary, not least-recently-used, so a hot key can go —
+          // and two concurrent inserts can both evict, briefly leaving
+          // the map one under the cap; both are harmless for a cache.
           if (fpMemo.size >= FpMemoCap) {
             val it = fpMemo.keySet().iterator()
             if (it.hasNext) { it.next(); it.remove() }

@@ -671,8 +671,8 @@ object Similarity {
     * per-(query, cell) scalar offset — precomputed on the driver and
     * carried on the broadcast probe pairs — to the same m table adds.
     *
-    * Defaults nProbe=10 / rerank=16 from the round-8
-    * [[graft.tools.RecallSweep]] (top-5, 20 queries): sf0.1 recall 0.84
+    * Defaults nProbe=10 / rerank=16 from the round-8 recall sweep vs
+    * brute-force cosine (top-5, 20 queries): sf0.1 recall 0.84
     * (8/16), 0.87 (8/32), 0.92 (10/16), 0.95 (12/16); sf0.001 0.86 /
     * 0.95 / 1.00 at 8/10/12 probes with rerank=16. The code-quality A/B
     * (admission removed: nProbe=nCells vs flat plain-code PQ) shows the
@@ -1370,7 +1370,9 @@ object Similarity {
   final case class BeamBudget(beamWidth: Int, rounds: Int, entries: Int)
 
   /** Corpus size at and below which the MEASURED fixture budgets
-    * (beam 32, rounds 3, entries 64 — the BeamBudgetSweep optimum)
+    * (beam 32, rounds 3, entries 64 — the round-13 budget sweep's
+    * optimum: (64 entries, 3 rounds) read recall 0.94 at 38 steady-state
+    * jobs on the graphK=3 probe, see [[beamSearchAnnOnGraph]])
     * suffice. Above it recall decays with the walk's hop radius: the
     * r15 lifecycle audit read 0.84 at n = 1.7×10⁶ on these defaults
     * where (96, 4, 256) read 1.0 (`descent_lifecycle_r15.json`). */
@@ -1396,13 +1398,19 @@ object Similarity {
     * (beam 1024, rounds 8, entries 2048 — the billion-vector regime,
     * where per-query work is still only O(beam·graphK·rounds·d)).
     * BeamBudgetRuleProbe is the two-scale recall evidence. */
-  def beamBudgetFor(n: Long): BeamBudget = {
-    val steps =
-      if (n <= BeamBudgetRefN) 0
-      else math.min(5,
-        math.ceil(math.log10(n.toDouble / BeamBudgetRefN) + 0.5).toInt)
+  def beamBudgetFor(n: Long): BeamBudget = beamBudgetAt(beamStepsFor(n))
+
+  /** [[beamBudgetFor]]'s step count at corpus size `n`: 0 at and below
+    * [[BeamBudgetRefN]], then one per decade rounded up from the
+    * half-decade point, capped at 5. */
+  def beamStepsFor(n: Long): Int =
+    if (n <= BeamBudgetRefN) 0
+    else math.min(5, math.ceil(math.log10(n.toDouble / BeamBudgetRefN) + 0.5).toInt)
+
+  /** The budget `steps` decades above the reference: beam and entry scan
+    * double per step, rounds grow by one. */
+  def beamBudgetAt(steps: Int): BeamBudget =
     BeamBudget(32 << steps, 3 + steps, 64 << steps)
-  }
 
   /** Resolve a caller's (beamWidth, rounds, entries) against the rule:
     * -1 (the serving entry points' default) means "from [[beamBudgetFor]]
@@ -1481,7 +1489,7 @@ object Similarity {
     * measure on the replica blow-up corpus (byte-identical twins make
     * every budget read recall 1.0); unjustified while the scan layer
     * saturates
-    * at 64 points (BeamBudgetSweep is the harness).
+    * at 64 points (the round-13/14 budget sweeps above).
     *
     * Scale shape: at 100 TB the graph is built once offline (the q157
     * scan) and this search touches it `rounds` times per query BATCH via

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.exprs.RcFunctions._
+import graft.exprs.GraftFunctions.call
 
 /** Entry points 1 and 2 (SURVEY §3): annotate+infer and infer-from-cached-
   * annotations, as library functions (not declared queries — LLM output has
@@ -36,7 +36,7 @@ object Inference {
     df.where(col("id") >= start && col("id") < end)
 
   private def branchFromLlm(out: String) = {
-    val parsed = dealPredictionUdf(col(out))
+    val parsed = call("graft_deal_prediction", col(out))
     struct(
       parsed.getField("reject").as("reject"),
       parsed.getField("answer").as("answer"),
@@ -194,8 +194,8 @@ object Inference {
           Prompts.appendTurn(col("messages_quality"), col("cf_quality.answer"), tmpl))
         val o2 = ChatModel.transform(m2, model, "_probQuality_msgs", "_probQuality")
         // deal_prediction strips/cleans before probability parse (run_llm_ours.py:169-185)
-        val ansU = dealPredictionUdf(col("_probUse")).getField("answer")
-        val ansQ = dealPredictionUdf(col("_probQuality")).getField("answer")
+        val ansU = call("graft_deal_prediction", col("_probUse")).getField("answer")
+        val ansQ = call("graft_deal_prediction", col("_probQuality")).getField("answer")
         Stages.fuse("probability", probUseRaw = Some(ansU), probQualityRaw = Some(ansQ))(o2)
           .drop("_probUse", "_probQuality", "_probUse_msgs", "_probQuality_msgs")
       case other => throw new IllegalArgumentException(s"unknown fusion strategy: $other")

@@ -2,7 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.exprs.RcFunctions._
+import graft.exprs.GraftFunctions.call
+import graft.exprs.RcFunctions.{matchStruct, truthy}
 
 /** The RC-RAG pipeline, re-expressed as composable `DataFrame => DataFrame`
   * stages (SURVEY §3: each entry point is a pure stage pipeline; partial
@@ -16,7 +17,7 @@ object Stages {
 
   /** A22 reference expansion (`run_llm_ours.py:90-94`). */
   def expandRefs(df: DataFrame): DataFrame =
-    df.withColumn("reference", expandReferences(col("reference")))
+    df.withColumn("reference", call("graft_expand_refs", col("reference")))
 
   /** A23 annotation (`our_method.py:4-9`): label keep/discard from
     * match(rag.answer, reference); the match scores land in the rag
@@ -83,17 +84,17 @@ object Stages {
     val dq = col("cf_quality.pred_decision")
     // LLM-consuming strategies must be given their completion columns —
     // a silent null default would resolve every disagreement to "discard"
-    // (fusionKeep(null) and 0.0-vs-0.0 tie) with no error.
+    // (graft_fusion(null) and 0.0-vs-0.0 tie) with no error.
     val disagree = strategy match {
       case "safety" =>
         when(du === "discard" || dq === "discard", "discard").otherwise("keep")
       case "prompt" =>
-        fusionKeep(fusionLlmOut.getOrElse(throw new IllegalArgumentException(
+        call("graft_fusion", fusionLlmOut.getOrElse(throw new IllegalArgumentException(
           "fuse(\"prompt\") requires fusionLlmOut (the fusion completion column)")))
       case "probability" =>
-        val pU = fusionProbability(probUseRaw.getOrElse(throw new IllegalArgumentException(
+        val pU = call("graft_probability", probUseRaw.getOrElse(throw new IllegalArgumentException(
           "fuse(\"probability\") requires probUseRaw (the cf_use confidence completion)")))
-        val pQ = fusionProbability(probQualityRaw.getOrElse(throw new IllegalArgumentException(
+        val pQ = call("graft_probability", probQualityRaw.getOrElse(throw new IllegalArgumentException(
           "fuse(\"probability\") requires probQualityRaw (the cf_quality confidence completion)")))
         when(pU > pQ, du).when(pU < pQ, dq).otherwise("discard") // tie ⇒ discard (quirk 9)
       case other => throw new IllegalArgumentException(s"unknown fusion strategy: $other")

@@ -157,8 +157,8 @@ object DataQueries {
       .otherwise(lit("better to drop it"))
     t(s, dir, "events")
       .select(col("event_id"),
-        graft.exprs.RcFunctions.fusionProbability(probStr).as("prob"),
-        graft.exprs.RcFunctions.fusionKeep(fuseStr).as("fused"))
+        graft.exprs.GraftFunctions.call("graft_probability", probStr).as("prob"),
+        graft.exprs.GraftFunctions.call("graft_fusion", fuseStr).as("fused"))
       .orderBy("event_id")
   }
 
@@ -708,7 +708,7 @@ object DataQueries {
   // ---- A9/A13-A15 extraction pipeline as a declared query --------------------
 
   /** `deal_prediction_with_evidence` (the real kernel, via
-    * [[graft.exprs.RcFunctions.dealPredictionUdf]]) over synthesized
+    * `graft_deal_prediction`) over synthesized
     * LLM-output strings whose shape keeps the extraction on the
     * SQL-expressible main path: no refusal markers, no Answer/Evidence
     * labels, two `##...##` spans — answer = spans deleted + strip,
@@ -723,7 +723,7 @@ object DataQueries {
     val synth = concat(lit("It is x"), element_at(split(col("text"), " "), 1),
       lit(" indeed. ## span "), (col("doc_id") % 5).cast("string"),
       lit(" ## more ## final "), col("doc_id").cast("string"), lit(" ##"))
-    val parsed = graft.exprs.RcFunctions.dealPredictionUdf(synth)
+    val parsed = graft.exprs.GraftFunctions.call("graft_deal_prediction", synth)
     t(s, dir, "documents")
       .select(col("doc_id"),
         parsed.getField("reject").as("reject"),

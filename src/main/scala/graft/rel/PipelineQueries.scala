@@ -428,7 +428,7 @@ object PipelineQueries {
     * weighted prefix filter (parity-spec'd against this declared form,
     * including on an engineered boilerplate flood). The declared query
     * deliberately stays on THIS unpruned form: an interleaved A/B on the
-    * sf0.1 corpus (`tools/WeightedJaccardAb`, identical output verified)
+    * sf0.1 corpus (round 9, identical output verified)
     * measures declared ~2.5 s vs pruned ~7.5 s — without boilerplate
     * flooding, the per-doc heaviest-first sort + prefix cut costs more
     * than the candidates it removes, so the pruned path is the escape
@@ -628,7 +628,7 @@ object PipelineQueries {
   /** Auto-selected weighted Jaccard (round-9 verdict item 7): choose the
     * declared unpruned form or the prefix-filtered form from a MEASURED
     * flood signal instead of asking the caller to know their corpus.
-    * The A/B (`tools/WeightedJaccardAb`) showed the prefix filter costs
+    * The round-9 sf0.1 A/B showed the prefix filter costs
     * more than it saves when nothing floods (2.5 s vs 7.5 s at sf0.1)
     * and the engineered-flood spec shows the opposite when boilerplate
     * survives the idf cut. Both forms are output-identical

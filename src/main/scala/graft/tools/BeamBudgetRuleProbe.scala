@@ -176,17 +176,16 @@ object BeamBudgetRuleProbe {
       // COUNTERFACTUAL: the rule's PREVIOUS step at the same n — the
       // measurement behind the half-decade round-up (r16 verdict item 3:
       // "step-1 reads 0.92 at n = 8.5×10⁵ where step-2 reads ≥ 0.95").
-      // Only meaningful above the reference scale, where a step-down
-      // exists; recorded next to the rule's own row so the artifact
-      // carries both sides of the rounding decision.
+      // Only meaningful where a step-down exists: above the reference
+      // scale, and below the cap's plateau (once the previous decade is
+      // capped too, the rule never serves the lower step). Recorded next
+      // to the rule's own row so the artifact carries both sides of the
+      // rounding decision.
+      val steps = graft.ops.Similarity.beamStepsFor(n)
       val prevJson =
-        if (n <= graft.ops.Similarity.BeamBudgetRefN) ""
+        if (steps == 0 || graft.ops.Similarity.beamStepsFor(n / 10) == steps) ""
         else {
-          val steps = Seq(budget.beamWidth / 32, budget.entries / 64)
-            .map(v => (math.log(v.toDouble) / math.log(2.0)).round.toInt).max
-          val prev = graft.ops.Similarity.BeamBudget(
-            32 << math.max(0, steps - 1), 3 + math.max(0, steps - 1),
-            64 << math.max(0, steps - 1))
+          val prev = graft.ops.Similarity.beamBudgetAt(steps - 1)
           val (gotPrev, prevSec) = time {
             graft.ops.Similarity.beamSearchAnnOnGraph(
                 g, emb, "vec_id", "embedding", qids, serveK,

@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
   * distinct-vector corpus above the crossover. This tool is that run:
   *
   *   - corpus: n (default 1.7×10⁶) deterministic hash-mixed uniform
-  *     vectors — BeamBudgetSweep's synthetic recipe, the structureless
-  *     worst case for a graph walk (dim default 16; the claim under
-  *     audit is routing + maintenance soundness, not dimensionality);
+  *     vectors — the round-14 budget sweep's synthetic recipe (20k
+  *     uniform vectors; entries 8 → 128 moved recall 0.66 → 0.68 there),
+  *     the structureless worst case for a graph walk (dim default 16;
+  *     the claim under audit is routing + maintenance soundness, not
+  *     dimensionality);
   *   - shard A = ids below n/2, shard B = the rest — each HALF is above
   *     the crossover, so every build in the probe (A, B) goes through
   *     the SAME `knnGraphAuto` router the declared queries use and

@@ -180,7 +180,7 @@ class OpsSpec extends AnyFunSuite {
     assert(recall >= 0.6, s"PQ recall $recall")
   }
 
-  // bound from the round-8 RecallSweep table (residual codes, nProbe=10/
+  // bound from the round-8 recall sweep (residual codes, nProbe=10/
   // rerank=16 defaults: sf0.001 recall 0.95, sf0.1 0.92) — see ivfPqTopK's
   // Scaladoc for the full grid and the residual-vs-plain code A/B
   test("IVF-PQ ANN recall >= 0.85 of brute-force top-5 (cells prune, residual codes score, exact re-rank)") {

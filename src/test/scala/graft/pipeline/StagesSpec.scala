@@ -85,7 +85,7 @@ class StagesSpec extends AnyFunSuite {
   test("expandReferences: split on ' or ', keep originals, dedup (A22)") {
     import spark.implicits._
     val out = Seq(Seq("x or y", "z", "y")).toDF("reference")
-      .select(graft.exprs.RcFunctions.expandReferences(col("reference")).as("r"))
+      .select(graft.exprs.GraftFunctions.call("graft_expand_refs", col("reference")).as("r"))
       .as[Seq[String]].collect()(0)
     assert(out == Seq("x or y", "z", "y", "x"))
   }

@@ -120,6 +120,14 @@ class PipelineQueriesSpec extends AnyFunSuite {
     assert(out.toSeq == Seq((1L, 2L, math.floor(jw * 1e4 + 0.5) / 1e4)))
   }
 
+  test("q126's corpus has unique doc_id (the idf's ndocs counts distinct doc_ids)") {
+    // weightedPostings counts N as COUNT(DISTINCT doc_id) over the
+    // postings, which equals the corpus's doc count only while doc_id is
+    // unique per documents row
+    val docs = Tables.load(spark, SparkTestBase.Sf0001, "documents")
+    assert(docs.count() == docs.select("doc_id").distinct().count())
+  }
+
   // ---- q127 dataset card (via the declared query on a temp table) ------------
 
   test("datasetCard arithmetic: dup count, discrete median, entropy hand case") {

@@ -15,6 +15,18 @@ class PlanDisciplineSpec extends AnyFunSuite {
     graft.SparkEntry.queries(name)(spark, dir).queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
+  test("q30/q58: the fusion and extraction parsers are the registered kernels, not UDFs") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import graft.exprs.{DealPredictionExpr, FusionExpr, ProbabilityExpr}
+    def exprs(name: String) = graft.SparkEntry.queries(name)(spark, dir).queryExecution
+      .analyzed.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    val q30 = exprs("q30_fusion_parse")
+    val q58 = exprs("q58_parse_extract")
+    assert(!(q30 ++ q58).exists(_.isInstanceOf[ScalaUDF]))
+    assert(q30.exists(_.isInstanceOf[ProbabilityExpr]) && q30.exists(_.isInstanceOf[FusionExpr]))
+    assert(q58.exists(_.isInstanceOf[DealPredictionExpr]))
+  }
+
   test("q01: both predicates push into the parquet scan; schema pruned") {
     val p = plan("q01_scan_filter_project")
     assert(p.contains("PushedFilters:"))
