@@ -43,9 +43,11 @@ object Graft {
   /** Register the full `graft_*` SQL function catalog (normalize/dot plus
     * the reference's scoring/parsing kernels — tokens_contain, em,
     * token_f1, rougel, fusion, probability, deal_prediction, expand_refs)
-    * on an EXISTING session that was built without the extensions class. */
+    * on an EXISTING session that was built without the extensions class,
+    * with the custom planner strategies ([[exprs.GraftExtensions.install]]:
+    * functions the session already has are left as they are). */
   def registerFunctions(spark: SparkSession): Unit =
-    exprs.GraftFunctions.register(spark)
+    exprs.GraftExtensions.install(spark)
 
   /** Register every test table under `dir` as a temp view (missing files
     * are skipped, so a partial directory still yields its tables). */

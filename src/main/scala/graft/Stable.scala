@@ -21,8 +21,4 @@ import org.apache.spark.sql.functions._
 object Stable {
   def r4(c: Column): Column = floor(c * 10000.0 + 0.5) / 10000.0
   def r2(c: Column): Column = floor(c * 100.0 + 0.5) / 100.0
-
-  /** The oracle-side spelling of [[r4]]/[[r2]]. */
-  def sqlR4(expr: String): String = s"floor(($expr) * 10000.0 + 0.5) / 10000.0"
-  def sqlR2(expr: String): String = s"floor(($expr) * 100.0 + 0.5) / 100.0"
 }

@@ -21,15 +21,20 @@ import graft.text.{ParseKernels, TextKernels}
   * These are Catalyst `Expression`s over the pure kernels, NOT Scala
   * UDFs: eval reads `ArrayData`/`UTF8String` directly off the internal
   * row (no catalyst→Scala row conversion layer, no encoder round-trip).
-  * They are `CodegenFallback` BY CHOICE, for two reasons: (a) every
-  * kernel here carries the reference's non-SQL null semantics (null
-  * prediction scores 0 / "discard" / reject=true — never null-out), which
-  * `nullSafeEval`-based codegen can't express without hand-rolling the
-  * null branches per function; (b) the kernels themselves (Porter
-  * stemming, NFD normalization, regex state machines) cost orders of
-  * magnitude more than one virtual call per row, so whole-stage fusion
-  * would be unmeasurable here (SURVEY §7.3's decision table — the same
-  * budget reasoning that keeps these kernels out of Python UDFs).
+  * They are `CodegenFallback` because every kernel here carries the
+  * reference's non-SQL null semantics (null prediction scores 0 /
+  * "discard" / reject=true — never null-out), which `nullSafeEval`-based
+  * codegen can't express without hand-rolling the null branches per
+  * function. That choice has a measured cost beyond the per-row call:
+  * Spark keeps any plan node whose expressions hold a `CodegenFallback`
+  * out of whole-stage codegen, so every pipeline `Project` that calls a
+  * kernel runs as a plain `ProjectExec` (no `*(n)` marker in the annotate
+  * and infer physical plans), which builds its projection code again in
+  * every task. A Flight Recorder profile of the `rcrag_llm` benchmark on
+  * 4 cores put that rebuild at 19 % of executor samples (35 % once the
+  * LLM call became a plan node).
+  * Emitting Java for these kernels (a static call plus explicit null
+  * branches) would put those projections back into whole-stage codegen.
   */
 object KernelBridge {
 

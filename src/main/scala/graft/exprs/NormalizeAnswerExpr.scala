@@ -43,10 +43,10 @@ case class NormalizeAnswerExpr(child: Expression) extends UnaryExpression {
   override def prettyName: String = "graft_normalize"
 }
 
-/** Registration surface: [[register]] installs the functions into a live
-  * session; [[GraftExtensions]] is the `spark.sql.extensions` injection
-  * point for cluster-wide installs (builder
-  * `.withExtensions(new GraftExtensions)` or
+/** The `graft_*` SQL function catalog. [[GraftExtensions.install]] puts it
+  * into a live session; the [[GraftExtensions]] class is the
+  * `spark.sql.extensions` injection point for cluster-wide installs
+  * (builder `.withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.exprs.GraftExtensions`). */
 object GraftFunctions {
 
@@ -87,20 +87,24 @@ object GraftFunctions {
   private def info(name: String, cls: Class[_]) =
     new ExpressionInfo(cls.getName, null, name)
 
-  def register(spark: SparkSession): Unit =
+  /** Registers the catalog's functions that `spark` does not have yet. */
+  private[exprs] def registerMissing(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     catalog.foreach { case (name, cls, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name), info(name, cls), builder)
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id)) registry.registerFunction(id, info(name, cls), builder)
     }
+  }
 
-  /** Best-effort-registered Column call: installs the catalog into the
-    * active (or default) session, then calls `fn`. The one home for the
-    * pattern [[graft.ops.Similarity.dot]] pioneered — bare-Column
-    * callers with no session at Column-construction time still work,
-    * DataFrame operators re-register on their own df.sparkSession. */
+  /** Best-effort-installed Column call: installs the graft surface into the
+    * active (or default) session ([[GraftExtensions.install]]), then calls
+    * `fn`. The one home for the pattern [[graft.ops.Similarity.dot]]
+    * pioneered — bare-Column callers with no session at
+    * Column-construction time still work, DataFrame operators install on
+    * their own df.sparkSession. */
   def call(fn: String, cols: org.apache.spark.sql.Column*): org.apache.spark.sql.Column = {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
+      .foreach(GraftExtensions.install)
     org.apache.spark.sql.functions.call_function(fn, cols: _*)
   }
 
@@ -116,11 +120,34 @@ object GraftFunctions {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.inject(ext)
-    // whole-operator per-key top-k (graft.plans.TopKPerKey): the planner
-    // strategy that turns the logical node into partial/final heap execs,
-    // plus the optimizer rule that pre-cuts row_number()<=k rank filters
-    // with it automatically
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    // the optimizer rule that pre-cuts row_number()<=k rank filters with
+    // TopKPerKey: opt-in only, since it rewrites the plans of every query
     ext.injectOptimizerRule(_ => graft.plans.InferTopKFromRankFilter)
+  }
+}
+
+/** The one imperative install path, for sessions built without the
+  * extensions class: [[GraftFunctions.call]], `TopK.perKey` and
+  * `ChatModel.transform` call it on their own session. */
+object GraftExtensions {
+
+  /** Planner strategies for the custom plan nodes: per-key top-k
+    * (partial/final heap execs) and the LLM call. */
+  val strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    Seq(graft.plans.TopKPerKeyStrategy, graft.pipeline.LlmCallStrategy)
+
+  /** Registers the `graft_*` functions `spark` lacks and appends each of
+    * [[strategies]] to `spark.experimental.extraStrategies` unless it is
+    * there already, so a second install changes nothing (and logs no
+    * "replaced a previously registered function" warning). Synchronized:
+    * concurrent first callers would race the check-then-add. The
+    * `InferTopKFromRankFilter` rule is not installed here (see the
+    * class). */
+  def install(spark: SparkSession): Unit = synchronized {
+    GraftFunctions.registerMissing(spark)
+    val exp = spark.experimental
+    val missing = strategies.filterNot(exp.extraStrategies.contains)
+    if (missing.nonEmpty) exp.extraStrategies = exp.extraStrategies ++ missing
   }
 }

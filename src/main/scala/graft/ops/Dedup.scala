@@ -61,29 +61,6 @@ object Dedup {
     seen.toArray(new Array[String](seen.size))
   }
 
-  /** Token-array form (tokens are opaque — NOT re-split, so a token
-    * containing a space stays one token, unlike a mkString round-trip). */
-  def shinglesKernel(toks: Seq[String], n: Int): Seq[String] =
-    if (toks == null || toks.length < n) Seq.empty
-    else {
-      val seen = new java.util.LinkedHashSet[String]()
-      val sb = new java.lang.StringBuilder(64)
-      var i = 0
-      while (i + n <= toks.length) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(toks(i + j))
-          j += 1
-        }
-        seen.add(sb.toString)
-        i += 1
-      }
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq
-    }
-
   private val shinglesUdf = udf((text: String, n: Int) => shinglesFromText(text, n))
 
   def shingles(textCol: Column, n: Int): Column =

@@ -89,7 +89,7 @@ object ExactQuantiles {
     // register on THE FRAME'S session (not just the thread-active one) —
     // the ops/Similarity convention; a multi-session caller would
     // otherwise hit an unresolved graft_double_bits
-    graft.exprs.GraftFunctions.register(df.sparkSession)
+    graft.exprs.GraftExtensions.install(df.sparkSession)
     df.select(col(groupCol) +: cols.map(c => sortableBits(col(c).cast("double"))): _*)
   }
 

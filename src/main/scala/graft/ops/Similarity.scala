@@ -58,7 +58,7 @@ object Similarity {
 
   def cosineTopK(emb: DataFrame, idCol: String, vecCol: String,
                  queryIds: Seq[Long], k: Int): DataFrame = {
-    graft.exprs.GraftFunctions.register(emb.sparkSession)
+    graft.exprs.GraftExtensions.install(emb.sparkSession)
     val asDouble = emb.select(col(idCol).as("vid"),
         col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
@@ -582,7 +582,7 @@ object Similarity {
              sampleCap: Int = 20000): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.exprs.GraftFunctions.register(spark)
+    graft.exprs.GraftExtensions.install(spark)
     val data = emb.select(col(idCol).cast("long").as("vid"),
       col(vecCol).cast("array<double>").as("arr"))
     val normed = normalized(data)
@@ -691,7 +691,7 @@ object Similarity {
                 sampleCap: Int = 20000): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.exprs.GraftFunctions.register(spark)
+    graft.exprs.GraftExtensions.install(spark)
     val data = emb.select(col(idCol).cast("long").as("vid"),
       col(vecCol).cast("array<double>").as("arr"))
     val normed = normalized(data)
@@ -779,7 +779,7 @@ object Similarity {
               corpusKey: Option[String] = None,
               sampleCap: Long = 100000L): DataFrame = {
     val spark = emb.sparkSession
-    graft.exprs.GraftFunctions.register(spark)
+    graft.exprs.GraftExtensions.install(spark)
     val data = emb.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("arr"))
     val centers = coarseCentersFor(data, nCells, corpusKey,
@@ -863,7 +863,7 @@ object Similarity {
                corpusKey: Option[String] = None,
                sampleCap: Long = 100000L): DataFrame = {
     val spark = emb.sparkSession
-    graft.exprs.GraftFunctions.register(spark)
+    graft.exprs.GraftExtensions.install(spark)
     val data = emb.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("arr"))
     val centers = coarseCentersFor(data, nCells, corpusKey,

@@ -1,14 +1,17 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** The LLM boundary (A8, `llm_ours.py:38-125`) — the one reference
   * operation that is not an analytics operator (SURVEY §7.5). Modeled as a
-  * pluggable trait executed via `mapPartitions` so connections/clients
-  * amortize per partition; failures degrade to `None`, which flows into
-  * the reference's null-prediction path (`utils.py:205`).
+  * pluggable trait executed by the [[LlmCall]] plan node, so
+  * connections/clients amortize per task; failures degrade to `None`,
+  * which flows into the reference's null-prediction path
+  * (`utils.py:205`).
   *
   * All tests and declared queries use [[DeterministicStub]] — the engine
   * is zero-egress by construction.
@@ -39,41 +42,35 @@ object ChatModel {
       }
   }
 
-  private val messageType = ArrayType(StructType(Seq(
-    StructField("role", StringType), StructField("content", StringType))))
-
   /** Run the model over a `messages ARRAY<STRUCT<role,content>>` column,
-    * appending a string `outCol` (null on failure). Distributed: one model
-    * instance per partition, completions in `batchSize` groups — the
-    * batched analog of the reference's per-record loop
-    * (`run_llm_ours.py:227`), with connection reuse the reference lacks.
-    * A model may run a batch's conversations concurrently
-    * ([[HttpChatModel]] does), so `batchSize` is also the per-task
-    * in-flight bound; across the cluster at most `batchSize` × running
-    * tasks requests are in flight.
+    * appending a string `outCol` (null on failure): the batched analog of
+    * the reference's per-record loop (`run_llm_ours.py:227`), with
+    * connection reuse the reference lacks. Builds one [[LlmCall]] plan
+    * node over `df`'s plan, so nothing runs until an action consumes the
+    * column; then each task feeds its rows to one model instance,
+    * `batchSize` conversations per [[Model.complete]] call. A model may run
+    * a batch's conversations concurrently ([[HttpChatModel]] does), so
+    * `batchSize` is also the per-task in-flight bound; across the cluster
+    * at most `batchSize` × running tasks requests are in flight.
     */
   def transform(df: DataFrame, model: Model, messagesCol: String, outCol: String,
                 batchSize: Int = 32): DataFrame = {
     val spark = df.sparkSession
-    val inSchema = df.schema
-    val outSchema = inSchema.add(outCol, StringType)
-    val msgIdx = inSchema.fieldIndex(messagesCol)
-    val rdd = df.rdd.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { rows =>
-        val batch = rows.map { row =>
-          val msgs = row.getSeq[Row](msgIdx)
-          if (msgs == null) Seq.empty[Message]
-          else msgs.map(m => Message(m.getString(0), m.getString(1)))
-        }
-        val outs = model.complete(batch)
-        require(outs.size == rows.size,
-          s"ChatModel returned ${outs.size} completions for ${rows.size} conversations" +
-            " — a short batch would silently drop rows in zip")
-        rows.zip(outs).map { case (row, out) =>
-          Row.fromSeq(row.toSeq :+ out.orNull)
-        }
-      }
+    graft.exprs.GraftExtensions.install(spark)
+    val plan = df.queryExecution.analyzed
+    val messages = plan.output.find(_.name == messagesCol).getOrElse(
+      throw new IllegalArgumentException(s"no column $messagesCol in ${plan.output.mkString(", ")}"))
+    messages.dataType match {
+      case ArrayType(StructType(Array(StructField(_, StringType, _, _),
+                                      StructField(_, StringType, _, _))), _) =>
+      case other => throw new IllegalArgumentException(
+        s"$messagesCol must be ARRAY<STRUCT<role STRING, content STRING>>, got ${other.catalogString}")
     }
-    spark.createDataFrame(rdd, outSchema)
+    val completion = AttributeReference(outCol, StringType)()
+    val call = LlmCall(model, messages, completion, batchSize, plan)
+    // expose the completion through an alias: analysis gives a Project's
+    // aliases fresh ids on one side of a self-join, but not the attributes
+    // a custom node produces
+    Bridge.ofRows(spark, Project(plan.output :+ Alias(completion, outCol)(), call))
   }
 }

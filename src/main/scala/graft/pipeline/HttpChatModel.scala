@@ -24,12 +24,15 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * (`run_llm_ours.py:227`), [[complete]] sends every conversation of a
   * batch at once (`sendAsync`) and returns the results in batch order; the
   * rules above apply to each conversation on its own, and a retry waits on
-  * a timer, not a thread. The batch is the in-flight bound: at most
-  * `batchSize` requests per task under [[ChatModel.transform]].
+  * a timer, not a thread. The batch is the in-flight bound: under
+  * [[ChatModel.transform]], [[LlmCallExec]] hands each task's rows to
+  * [[complete]] `batchSize` at a time, so at most `batchSize` requests per
+  * task are in flight.
   *
-  * One client per deserialized model instance, i.e. per task under
-  * [[ChatModel.transform]], so connections amortize across a partition's
-  * rows.
+  * One client per deserialized model instance, i.e. per task of the
+  * [[LlmCall]] plan node, so connections amortize across a partition's
+  * rows. The node's plan string names this class only, so `explain` and
+  * the SQL listener never see `apiKey`.
   */
 final class HttpChatModel(
     url: String,

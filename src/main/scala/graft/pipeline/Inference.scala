@@ -49,7 +49,13 @@ object Inference {
   /** Entry point 1: RAG generation + annotation (`run_llm_ours.py:82-98`).
     * Source QA samples in ([[Schemas.qaSample]]); out: the source columns
     * plus `messages` (the rag conversation), `rag`, expanded `reference`,
-    * `label_decision`. */
+    * `label_decision`.
+    *
+    * The returned frame is lazy: its plan holds the rag [[LlmCall]], so
+    * every action on it sends the rag asks again. A caller that runs more
+    * than one action on it (say, writes the annotations and then runs
+    * [[inferDecideFuse]], whose branch checkpoints are actions) must
+    * materialize it first, e.g. with `localCheckpoint()`. */
   def ragAnnotate(samples: DataFrame, model: ChatModel.Model, cfg: Config): DataFrame = {
     val ctxs = col(raDict(cfg.raType))
     val prompt = Prompts.singlePrompt("rag", col("question"), ctxs, cfg.numPassage)
@@ -164,6 +170,10 @@ object Inference {
 
     // fusion() returns before any LLM call when the branches agree
     // (run_llm_ours.py:144-146) — split so only disagreement pays LLM cost.
+    // The LLM strategies checkpoint the disagreeing rows right after their
+    // fusion asks (about a quarter of the rows), so the returned frame
+    // holds no LLM call: a caller may sort it, write it or run several
+    // actions on it and each fusion ask is still sent once.
     val agree = afterQuality.where(du === dq).withColumn("pred_decision", du)
     val disagreeIn = afterQuality.where(du =!= dq)
 
@@ -181,8 +191,8 @@ object Inference {
         val withMsgs = disagreeIn.withColumn("_fusion_msgs",
           Prompts.appendTurn(convo, prevAns, tmpl))
         val out = ChatModel.transform(withMsgs, model, "_fusion_msgs", "_fusion")
-        Stages.fuse("prompt", fusionLlmOut = Some(col("_fusion")))(out)
-          .drop("_fusion", "_fusion_msgs")
+          .drop("_fusion_msgs").localCheckpoint() // asked once per pass (see above)
+        Stages.fuse("prompt", fusionLlmOut = Some(col("_fusion")))(out).drop("_fusion")
       case "probability" =>
         // two independent asks, one per branch conversation
         // (run_llm_ours.py:166-187: messages / messages1)
@@ -193,11 +203,12 @@ object Inference {
         val m2 = o1.withColumn("_probQuality_msgs",
           Prompts.appendTurn(col("messages_quality"), col("cf_quality.answer"), tmpl))
         val o2 = ChatModel.transform(m2, model, "_probQuality_msgs", "_probQuality")
+          .drop("_probUse_msgs", "_probQuality_msgs").localCheckpoint() // asked once per pass (see above)
         // deal_prediction strips/cleans before probability parse (run_llm_ours.py:169-185)
         val ansU = call("graft_deal_prediction", col("_probUse")).getField("answer")
         val ansQ = call("graft_deal_prediction", col("_probQuality")).getField("answer")
         Stages.fuse("probability", probUseRaw = Some(ansU), probQualityRaw = Some(ansQ))(o2)
-          .drop("_probUse", "_probQuality", "_probUse_msgs", "_probQuality_msgs")
+          .drop("_probUse", "_probQuality")
       case other => throw new IllegalArgumentException(s"unknown fusion strategy: $other")
     }
     Stages.rejectOverride(agree.unionByName(disagree))

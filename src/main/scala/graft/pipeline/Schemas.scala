@@ -43,18 +43,4 @@ object Schemas {
     StructField("cf_use", branch(withDecision = true)),
     StructField("cf_quality", branch(withDecision = true)),
   ))
-
-  /** Final eval record (`run_llm_ours.py:295-306`). */
-  val evalRecord: StructType = StructType(Seq(
-    StructField("risk", DoubleType),
-    StructField("overcaution", DoubleType),
-    StructField("recall", DoubleType),
-    StructField("carefulness", DoubleType),
-    StructField("alignment", DoubleType),
-    StructField("coverage", DoubleType),
-    StructField("AK", LongType),
-    StructField("AD", LongType),
-    StructField("UK", LongType),
-    StructField("UD", LongType),
-  ))
 }

@@ -14,11 +14,4 @@ object Sink {
 
   def appendJsonl(df: DataFrame, dir: String): Unit =
     df.write.mode("append").json(dir)
-
-  /** The eval record write (`run_llm_ours.py:308`): one summary row.
-    * SINGLE-ROW ONLY — the coalesce(1) exists so the one metrics record
-    * lands in one file; it serializes the write through a single task, so
-    * never reuse this for data-sized outputs (use [[appendJsonl]]). */
-  def writeEval(df: DataFrame, dir: String): Unit =
-    df.coalesce(1).write.mode("overwrite").json(dir)
 }

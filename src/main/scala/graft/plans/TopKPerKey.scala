@@ -444,11 +444,11 @@ private[plans] object ExternalGroupLimitSorter {
   }
 }
 
-/** User-facing constructor. Self-registering: the strategy rides
-  * `spark.experimental.extraStrategies` so ANY session can plan the node
-  * (no `spark.sql.extensions` opt-in needed — the same imperative path
-  * `GraftFunctions.register` uses for the SQL functions); sessions built
-  * via [[graft.Graft.session]] get it from `GraftExtensions` too. */
+/** User-facing constructor. Self-installing: the strategy rides
+  * `spark.experimental.extraStrategies` ([[graft.exprs.GraftExtensions.install]])
+  * so ANY session can plan the node (no `spark.sql.extensions` opt-in
+  * needed); sessions built via [[graft.Graft.session]] get it from the
+  * `GraftExtensions` class too. */
 object TopK {
   /** Per-task byte budget for heap state; past it a task degrades to the
     * documented fallback (partial: frozen keys + pass-through; final:
@@ -464,13 +464,7 @@ object TopK {
   def perKey(df: DataFrame, keyCols: Seq[String], orderCols: Seq[Column],
              k: Int): DataFrame = {
     val spark = df.sparkSession
-    // synchronized: concurrent first-callers on one session would race the
-    // read-append (a duplicate entry is harmless but pointless)
-    TopK.synchronized {
-      if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
+    graft.exprs.GraftExtensions.install(spark)
     import org.apache.spark.sql.graftbridge.Bridge
     val keyExprs: Seq[Expression] =
       keyCols.map(n => Bridge.expression(org.apache.spark.sql.functions.col(n)))

@@ -382,7 +382,7 @@ object DataQueries {
     * end-to-end through `spark.sql` (function registered via the same
     * injection the `GraftExtensions` entry point uses). */
   def q45CustomExprNormalize(s: SparkSession, dir: String): DataFrame = {
-    graft.exprs.GraftFunctions.register(s)
+    graft.exprs.GraftExtensions.install(s)
     t(s, dir, "documents").createOrReplaceTempView("graft_docs")
     s.sql(
       """SELECT doc_id, md5(graft_normalize('The ' || text || '!')) AS norm_hash

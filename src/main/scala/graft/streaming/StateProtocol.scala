@@ -53,8 +53,6 @@ private[graft] object StateProtocol {
       * remote namenode/object store pays one round-trip per listing
       * instead of a stat per child. */
     def children: Seq[(String, Boolean)]
-    /** Names of direct children (dirs and files), empty when absent. */
-    def childNames: Seq[String] = children.map(_._1)
     def readSmall(name: String): Option[String]
     /** Write `content` to a temp child then rename onto `destName` —
       * atomic on POSIX/HDFS, the scheme's own contract elsewhere. */

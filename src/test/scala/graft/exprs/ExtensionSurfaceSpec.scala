@@ -8,8 +8,23 @@ import graft.SparkTestBase
 class ExtensionSurfaceSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
+  test("install is idempotent: a second call changes no function and adds no strategy") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    GraftExtensions.install(spark)
+    val registry = spark.sessionState.functionRegistry
+    def infos = GraftFunctions.names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+    val before = infos
+    val strategies = spark.experimental.extraStrategies
+    assert(before.forall(_.isDefined))
+    GraftExtensions.install(spark)
+    // a re-registration would store a fresh ExpressionInfo
+    assert(infos.zip(before).forall { case (a, b) => a.get eq b.get })
+    assert(spark.experimental.extraStrategies == strategies)
+    assert(GraftExtensions.strategies.forall(s => strategies.count(_ == s) == 1))
+  }
+
   test("graft_normalize SQL function matches the kernel on quirk inputs") {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val cases = Seq("The  quick, brown fox!", "a the an", "...", "thé café",
       "Answer is (the) BEST-one!", "")
     import spark.implicits._
@@ -19,7 +34,7 @@ class ExtensionSurfaceSpec extends AnyFunSuite {
   }
 
   test("graft_normalize handles null and stays in codegen plans") {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val out = spark.sql("SELECT graft_normalize(CAST(NULL AS STRING))").collect()(0)
     assert(out.isNullAt(0))
     // expression participates in whole-stage codegen (no UDF boundary):
@@ -36,7 +51,7 @@ class ExtensionSurfaceSpec extends AnyFunSuite {
   }
 
   test("graft_dot: exact ascending-fold value, nulls, codegen, length mismatch") {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)))
       .toDF("a", "b").createOrReplaceTempView("dot_in")
@@ -71,7 +86,7 @@ class ExtensionSurfaceSpec extends AnyFunSuite {
   }
 
   test("graft_dot_q / graft_sqdist_q: exact integer folds, nulls, codegen, HOF parity") {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     val got = spark.sql(
       "SELECT graft_dot_q(array(2L, 3L, -4L), array(10L, 100L, 1000L))")

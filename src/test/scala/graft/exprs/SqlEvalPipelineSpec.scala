@@ -18,7 +18,7 @@ class SqlEvalPipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
   private def fixture(): DataFrame = {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val df = spark.read.schema(Schemas.resultRecord)
       .json(SparkTestBase.FixtureJsonl)
       .withColumnRenamed("answer", "reference")
@@ -147,7 +147,7 @@ class SqlEvalPipelineSpec extends AnyFunSuite {
 
   test("graft_deal_prediction parses raw completions identically to ParseKernels.dealPrediction") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val raws = Seq(
       "Answer: Paris Evidence: ##found in Passage-3##",
       "answer: plain text with no markers",
@@ -170,7 +170,7 @@ class SqlEvalPipelineSpec extends AnyFunSuite {
   }
 
   test("kernel functions keep reference null semantics (score-0 / discard, never null)") {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val r = spark.sql(
       """SELECT graft_em(array('x'), CAST(NULL AS STRING)) AS em,
                 graft_token_f1(array('x'), CAST(NULL AS STRING)) AS f1,
@@ -185,7 +185,7 @@ class SqlEvalPipelineSpec extends AnyFunSuite {
   }
 
   test("graft_tokens_contain skips NULL answer elements (no trivial-containment footgun)") {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val r = spark.sql(
       """SELECT graft_tokens_contain(array(CAST(NULL AS STRING)), 'some text') AS only_null,
                 graft_tokens_contain(array(NULL, 'text'), 'some text') AS null_plus_hit,
@@ -201,7 +201,7 @@ class SqlEvalPipelineSpec extends AnyFunSuite {
 
   test("graft_expand_refs on fixed arrays: split on ' or ', extend, dedup") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     Seq((0, Seq("x or y", "z", "y")), (1, Seq("plain")), (2, Seq("a or b or c", "a")))
       .toDF("id", "reference").createOrReplaceTempView("refs_in")
     val viaSql = spark.sql("SELECT graft_expand_refs(reference) AS r FROM refs_in ORDER BY id")
@@ -214,7 +214,7 @@ class SqlEvalPipelineSpec extends AnyFunSuite {
 
   test("kernel parity sweep: SQL functions equal the Scala kernels on mixed Unicode inputs") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val cases = Seq(
       (Seq("café au lait", "naïve"), "A naïve answer about café au lait"),
       (Seq("北京大学"), "answer: 北京大学 is the reference"),

@@ -62,7 +62,7 @@ class ExactQuantilesSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(vs.map(v => Row(java.lang.Double.valueOf(v))) :+ Row(null), 2),
       StructType(Seq(StructField("x", DoubleType))))
     df.createOrReplaceTempView("bits_probe")
-    graft.exprs.GraftFunctions.register(spark)
+    graft.exprs.GraftExtensions.install(spark)
     // SQL-function spelling (codegen'd projection over the frame)
     val got = spark.sql(
       "SELECT x, graft_double_bits(x) AS k FROM bits_probe").collect()

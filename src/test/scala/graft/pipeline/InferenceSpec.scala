@@ -41,6 +41,20 @@ final class BranchStub(use: Map[String, String], quality: Map[String, String],
     }
 }
 
+/** Passes `inner`'s completions through, except that a probability ask on
+  * a conversation holding `marker` gets `None` (counted as "null" in
+  * [[IterCounter]]). */
+final class NullingStub(inner: ChatModel.Model, marker: String) extends ChatModel.Model {
+  override def complete(batch: Seq[Seq[ChatModel.Message]]): Seq[Option[String]] =
+    inner.complete(batch).zip(batch).map { case (out, msgs) =>
+      val users = msgs.filter(_.role == "user").map(_.content)
+      if (users.last.contains(BranchStub.Kinds("probability")) && users.exists(_.contains(marker))) {
+        IterCounter.counts.merge("null", 1, (a, b) => a + b)
+        None
+      } else out
+    }
+}
+
 object BranchStub {
   /** Prompt kind -> a phrase only that kind's template contains. */
   val Kinds: Map[String, String] = Map(
@@ -144,7 +158,7 @@ class InferenceSpec extends AnyFunSuite {
     "Question: r5?" -> "## Passage-0 ##",
     "Question: r6?" -> "## Passage-1 ##",
     "Question: r7?" -> "Answer: apple pear\nEvidence: ## Passage-0 ##")
-  private val branchModel = new BranchStub(
+  private def newBranchModel = new BranchStub(
     use = ragScript ++ Map(
       BranchStub.Kinds("cf_use") -> "Answer: apple!\nEvidence: ## Passage-0 ##.",
       BranchStub.Kinds("fusion_use") -> "I choose $$ keep $$",
@@ -154,6 +168,7 @@ class InferenceSpec extends AnyFunSuite {
       BranchStub.Kinds("fusion_quality") -> "I choose $$ discard $$",
       BranchStub.Kinds("probability") -> "probability: 0.8."),
     useLate = Map(BranchStub.Kinds("cf_use") -> "## ##"))
+  private val branchModel = newBranchModel
 
   private def eightSamples = {
     import spark.implicits._
@@ -172,7 +187,7 @@ class InferenceSpec extends AnyFunSuite {
       .select("id", "cf_use.pred_decision", "cf_quality.pred_decision", "pred_decision",
         "cf_use.EM", "cf_use.F1", "cf_use.RL", "cf_use.has_answer",
         "cf_quality.EM", "cf_quality.F1", "cf_quality.RL", "cf_quality.has_answer")
-      .collect().toSeq.sortBy(_.getLong(0)) // no orderBy: its range sampling re-runs the fusion asks
+      .orderBy("id").collect().toSeq
     def scores(r: Row, at: Int) =
       (r.get(at), r.get(at + 1), r.get(at + 2), r.get(at + 3))
     val decisions = rows.map(r => (r.getString(1), r.getString(2), r.getString(3)))
@@ -240,6 +255,115 @@ class InferenceSpec extends AnyFunSuite {
       ("discard", "discard", "discard")))
     assert(scores == eightScores)
     assert(calls == Map("rag" -> 8, "cf_use" -> 16, "cf_quality" -> 16, "probability" -> 8))
+  }
+
+  /** The model calls per prompt kind that one single-`collect` pass over
+    * [[eightSamples]] makes at `numIteration` 1. */
+  private val onePassCalls = Map(
+    "prompt" -> Map("rag" -> 8, "cf_use" -> 8, "cf_quality" -> 8,
+      "fusion_use" -> 2, "fusion_quality" -> 2),
+    "probability" -> Map("rag" -> 8, "cf_use" -> 8, "cf_quality" -> 8, "probability" -> 8))
+
+  test("each LLM ask is sent once per pass, whatever the caller runs on the result") {
+    def calls(): Map[String, Int] =
+      IterCounter.counts.asScala.map { case (k, v) => k -> v.intValue }.toMap
+    val dir = java.nio.file.Files.createTempDirectory("graft-once").toString
+    val patterns: Seq[(String, org.apache.spark.sql.DataFrame => Unit)] = Seq(
+      "collect" -> (_.collect()),
+      "orderBy then collect" -> (_.orderBy("id").collect()),
+      "two actions" -> { df => df.count(); df.collect() },
+      "appendJsonl then metrics" -> { df =>
+        Sink.appendJsonl(df, s"$dir/${java.util.UUID.randomUUID}")
+        Stages.metrics(Stages.confusion(df)).collect()
+      })
+    for (strategy <- Seq("prompt", "probability"); (name, run) <- patterns) {
+      val cfg = Inference.Config(fusionStrategy = strategy)
+      IterCounter.counts.clear()
+      run(Inference.inferDecideFuse(Inference.ragAnnotate(eightSamples, branchModel, cfg),
+        branchModel, cfg))
+      assert(calls() == onePassCalls(strategy), s"$strategy fusion, $name")
+    }
+    // ragAnnotate's frame is lazy: writing it and then inferring from it
+    // sends the rag asks once only when the caller materializes it first
+    val cfg = Inference.Config(fusionStrategy = "probability")
+    IterCounter.counts.clear()
+    val annotated = Inference.ragAnnotate(eightSamples, branchModel, cfg).localCheckpoint()
+    Sink.appendJsonl(annotated.select("id", "rag", "label_decision"), s"$dir/annotated")
+    Inference.inferDecideFuse(annotated, branchModel, cfg).collect()
+    assert(calls() == onePassCalls("probability"))
+  }
+
+  /** Runs `body` and returns every query execution it ran that holds an
+    * [[LlmCall]] to `model`, once Spark has reported them all (`n`). */
+  private def executionsOf(model: ChatModel.Model, n: Int)(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.optimizedPlan.exists { case c: LlmCall => c.model eq model; case _ => false })
+          seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      eventually(timeout(20.seconds)) { assert(seen.size >= n) }
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  test("every LLM ask is an LlmCall node planned as LlmCallExec, with no Row round trip") {
+    import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, LogicalPlan,
+      SerializeFromObject}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    def count(plan: LogicalPlan)(pf: PartialFunction[LogicalPlan, Unit]) =
+      plan.collect(pf).size
+    def noRowRoundTrip(plan: LogicalPlan) = count(plan) {
+      case _: SerializeFromObject | _: DeserializeToObject => ()
+    } == 0
+    val cfg = Inference.Config(fusionStrategy = "probability")
+    val model = newBranchModel // its own instance: no other spec's plans match it
+    val annotated = Inference.ragAnnotate(eightSamples, model, cfg)
+    val qe = annotated.queryExecution
+    assert(count(qe.optimizedPlan) { case _: LlmCall => () } == 1)
+    assert(helper.collect(qe.executedPlan) { case e: LlmCallExec => e }.size == 1)
+    assert(count(qe.analyzed) { case _: LogicalRDD => () } == 0)
+    assert(noRowRoundTrip(qe.optimizedPlan))
+    // inferDecideFuse runs its asks inside its two checkpoints: the
+    // branches' (rag, cf_use, cf_quality) and the fusion asks' (two), which
+    // read the first checkpoint, the only RDD scan
+    val ran = executionsOf(model, 2) {
+      Inference.inferDecideFuse(annotated, model, cfg).collect()
+    }
+    val plans = ran.map(_.optimizedPlan)
+    assert(plans.map(p => count(p) { case _: LlmCall => () }).sorted == Seq(2, 3))
+    assert(ran.map(e => helper.collect(e.executedPlan) { case x: LlmCallExec => x }.size).sum == 5)
+    assert(plans.map(p => count(p) { case _: LogicalRDD => () }).sum == 1)
+    assert(plans.forall(noRowRoundTrip))
+  }
+
+  test("LlmCallExec's call and null-output metrics equal the model's own counts") {
+    val cfg = Inference.Config(fusionStrategy = "probability")
+    // the cf_quality conversation's probability ask fails (None): 4 nulls
+    val nulling = new NullingStub(branchModel, BranchStub.Kinds("cf_quality"))
+    IterCounter.counts.clear()
+    val ran = executionsOf(nulling, 2) {
+      Inference.inferDecideFuse(Inference.ragAnnotate(eightSamples, nulling, cfg), nulling, cfg)
+        .collect()
+    }
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    val execs = ran.flatMap(e => helper.collect(e.executedPlan) { case x: LlmCallExec => x })
+    def metric(name: String) = execs.map(_.metrics(name).value).sum
+    val counted = IterCounter.counts.asScala.map { case (k, v) => k -> v.intValue }.toMap
+    assert(counted("null") == 4)
+    assert(metric("calls") == (counted - "null").values.sum)
+    assert(metric("nullOutputs") == counted("null"))
   }
 
   test("the pipeline's analyzed plans call the registered kernels, never a ScalaUDF") {

@@ -17,8 +17,7 @@ class InferTopKFromRankFilterSpec extends AnyFunSuite {
     val before = exp.extraOptimizations
     exp.extraOptimizations = before :+ InferTopKFromRankFilter
     // the strategy must be present to plan the inserted node
-    if (!exp.extraStrategies.contains(TopKPerKeyStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKPerKeyStrategy
+    graft.exprs.GraftExtensions.install(spark)
     try f finally exp.extraOptimizations = before
   }
 

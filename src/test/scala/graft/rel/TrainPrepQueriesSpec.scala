@@ -76,8 +76,7 @@ class TrainPrepQueriesSpec extends AnyFunSuite {
     val exp = spark.experimental
     val before = exp.extraOptimizations
     exp.extraOptimizations = before :+ graft.plans.InferTopKFromRankFilter
-    if (!exp.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.TopKPerKeyStrategy
+    graft.exprs.GraftExtensions.install(spark)
     try {
       val df = TrainPrepQueries.q138QuotaSample(spark, dir)
       assert(df.queryExecution.optimizedPlan.toString.contains("TopKPerKey"),
